@@ -319,13 +319,15 @@ class Tracer:
     def dump(self, path: Path, extra: dict) -> None:
         path.parent.mkdir(parents=True, exist_ok=True)
         t0 = min((s.start for s in self.spans), default=0.0)
-        rows = []
+        rows, by_layer = [], {}
         for s in self.spans:
             d = asdict(s)
             d["start"], d["end"] = s.start - t0, s.end - t0
             d["self_s"] = self.self_time(s)
+            by_layer[s.layer] = by_layer.get(s.layer, 0.0) + d["self_s"]
             rows.append(d)
-        path.write_text(json.dumps({**extra, "spans": rows, "batches": self.batches}, indent=0))
+        path.write_text(json.dumps({**extra, "self_s_by_layer": by_layer, "spans": rows,
+                                    "batches": self.batches}, indent=0))
 
 
 def _bytes_since(root: Path, t_ns: int) -> int:
