@@ -69,15 +69,21 @@ _BAD_PRICES = ("$.,", "N/A", "", "12a")
 _BAD_PROVIDERS = ("@#$!", "")
 HEADER_WIDTH = 8  # real sheets end in empty columns: "Producto,Fecha 1,Provedor,Precio,,,,"
 
+# The shape of the traffic.  FIXTURES.md names the kinds of mess a price
+# list carries but gives no shares, and the reference's real sample is not
+# in the repository, so these figures are assumptions, not measurements.
+OVERLAP_SHARE = 0.5  # rows that repeat a product drawn earlier (same file or an earlier one)
+MALFORMED_SHARE = 0.04  # rows with one malformed cell
+MISALIGNED_SHARE = 0.1  # rows that lack the trailing empty columns
+PROVIDERS_PER_FILE = (2, 3)  # inclusive range
+
 
 @dataclass(frozen=True)
 class PriceListParams:
-    """The traffic dimensions of an ETL workload."""
+    """The traffic dimensions an ETL workload varies."""
 
     rows_per_file: int = 1500
-    redelivery_share: float = 0.25  # share of deliveries that resend an earlier file
-    overlap_share: float = 0.5  # share of rows that re-price a product seen earlier
-    malformed_share: float = 0.04  # share of rows with one malformed cell
+    redelivery_share: float = 0.25  # assumed share of deliveries that resend an earlier file
     bulk: bool = False  # the standard 5-column header with an IVA column
 
 
@@ -155,8 +161,7 @@ def _sheet(rng: random.Random, rows: list[list[str]], bulk: bool) -> str:
         head = ["Producto", rng.choice(("Fecha 1", "Fecha")), "Provedor", "Precio"]
         w.writerow(head + [""] * (HEADER_WIDTH - len(head)))
     for row in rows:
-        # misaligned rows: some lines lack the trailing empty columns
-        pad = [] if rng.random() < 0.1 else [""] * (HEADER_WIDTH - len(row))
+        pad = [] if rng.random() < MISALIGNED_SHARE else [""] * (HEADER_WIDTH - len(row))
         w.writerow(row + pad)
     return out.getvalue()
 
@@ -177,20 +182,20 @@ def deliveries(seed: int, params: PriceListParams) -> Iterator[Delivery]:
             src = rng.choice(fresh)
             yield Delivery(src.name, src.text, src.rows, redelivery=True)
             continue
-        providers = rng.sample(_PROVIDERS, rng.randint(2, 3))
+        providers = rng.sample(_PROVIDERS, rng.randint(*PROVIDERS_PER_FILE))
         base = start + timedelta(weeks=len(fresh))
         rows = []
         for _ in range(params.rows_per_file):
             desc = (
                 rng.choice(cat.seen)
-                if cat.seen and rng.random() < params.overlap_share
+                if cat.seen and rng.random() < OVERLAP_SHARE
                 else cat.fresh()
             )
             day = base + timedelta(days=rng.randint(0, 6))
             date_s = _date_text(rng, day)
             price_s = _price_text(rng, rng.randint(100, 2_000_000))
             prov_s = rng.choice(rng.choice(providers))
-            if rng.random() < params.malformed_share:
+            if rng.random() < MALFORMED_SHARE:
                 which = rng.randrange(3)
                 if which == 0:
                     date_s = rng.choice(_BAD_DATES)

@@ -115,16 +115,11 @@ class Run:
     def span(self, layer: str, name: str):
         return self.tracer.span(layer, name) if self.tracer is not None else nullcontext()
 
-    def record_plan(self, df) -> None:
-        """Catalyst phase time of ``df``'s own query execution, on the
-        last operation's root span."""
-        qe = df._jdf.queryExecution()
-        qe.executedPlan()
-        it = qe.tracker().phases().iterator()
-        ms = 0
-        while it.hasNext():
-            ms += it.next()._2().durationMs()
-        self.last_root.attrs["plan_s"] = ms / 1000
+    def record_plan(self) -> None:
+        """Catalyst phase time of the query executions the last operation
+        ran (its construction-time jobs and its action, as reported by a
+        query execution listener), on its root span."""
+        self.last_root.attrs["plan_s"] = self.tracer.take_plan_s()
 
 
 def _environment(work: Path) -> None:
@@ -290,6 +285,8 @@ def execute(wl, seed: int, seconds: int, trace: bool) -> dict:
         finally:
             if run.tracer is not None:
                 run.tracer.restore()
+        # the output checks and any untraced extras run with the tracer gone
+        wl.finish(run, out)
         memory = _memory_mb(run.spark)
 
         if trace:

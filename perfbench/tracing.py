@@ -12,7 +12,10 @@ stage and task counts come from ``statusTracker()``: a span records the
 job-id high-water mark when it opens and closes, so jobs started on the
 package's thread pools land in the span that caused them.  A span that
 overlapped a non-ancestor span on another thread (M1 next to U1, the
-three staging appends) keeps its time but no counts.
+three staging appends) keeps its time but no counts.  Two listeners are
+registered while the tracer is installed: a ``StreamingQueryListener``
+for micro-batch progress and a ``QueryExecutionListener`` for the
+Catalyst phase time of every query execution that actually ran.
 """
 
 from __future__ import annotations
@@ -84,8 +87,11 @@ class Tracer:
         self._op_root: Span | None = None
         self._restore: list[tuple[object, str, object]] = []
         self._listener = None
+        self._qe_listener = None
         self.spans: list[Span] = []
         self.batches: list[dict] = []
+        self.plan_s: list[float] = []  # per finished query execution
+        self._plans_taken = 0
         self.bookkeeping_s = 0.0
 
     # -- job high-water mark ----------------------------------------------
@@ -256,12 +262,38 @@ class Tracer:
                 pass
 
         self._listener = _Progress()
-        self.spark.streams.addListener(self._listener)
+        self.spark.streams.addListener(self._listener)  # starts the py4j callback server
+
+        class _Executions:
+            """Catalyst phase time of every query execution that ran."""
+
+            def onSuccess(self, func, qe, duration_ns):
+                ms, it = 0, qe.tracker().phases().iterator()
+                while it.hasNext():
+                    ms += it.next()._2().durationMs()
+                tracer.plan_s.append(ms / 1000)
+
+            def onFailure(self, func, qe, exc):
+                tracer.plan_s.append(0.0)
+
+            class Java:
+                implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+        self._qe_listener = _Executions()
+        self.spark._jsparkSession.listenerManager().register(self._qe_listener)
 
     def _drain(self) -> None:
-        """Wait until Spark's listener bus (job status, stream progress)
-        has delivered everything posted so far."""
+        """Wait until Spark's listener bus (job status, stream progress,
+        finished query executions) has delivered everything posted so far."""
         self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+    def take_plan_s(self) -> float:
+        """Catalyst phase seconds (analysis, optimisation, planning) of the
+        query executions that finished since the last call."""
+        self._drain()
+        new = self.plan_s[self._plans_taken:]
+        self._plans_taken += len(new)
+        return sum(new)
 
     def restore(self) -> None:
         for owner, attr, orig in reversed(self._restore):
@@ -270,7 +302,8 @@ class Tracer:
         if self._listener is not None:
             self._drain()
             self.spark.streams.removeListener(self._listener)
-            self._listener = None
+            self.spark._jsparkSession.listenerManager().unregister(self._qe_listener)
+            self._listener = self._qe_listener = None
 
     # -- resolution and output ---------------------------------------------
 
