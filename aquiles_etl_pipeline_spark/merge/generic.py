@@ -30,13 +30,16 @@ column names — ``F.col("price")``, not ``F.col("_src_price")``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .schemas import N_BUCKETS
 from .warehouse import Warehouse
 
 SRC = "_src_"
+# per-row clause tag ("updated" / "deleted" / "inserted", NULL for an
+# untouched row), counted by the write job's Observation then dropped
+OP = "_merge_op"
 
 
 def _bucket_expr(key_cols: list[str]) -> Column:
@@ -56,7 +59,6 @@ def merge_into(
     insert: bool = True,
     insert_values: dict[str, Column] | None = None,
     bucket_col: str | None = None,
-    collect_stats: bool = True,
 ) -> dict[str, int]:
     """Execute a MERGE INTO ``table`` from ``source`` keyed on ``on``.
 
@@ -81,7 +83,7 @@ def merge_into(
     two source rows makes UPDATE semantics ambiguous, so the merge
     REFUSES (the Delta ``MERGE`` multiple-match error) instead of
     picking one nondeterministically.  Returns counts
-    {updated, deleted, inserted} (-1s when ``collect_stats=False``).
+    {updated, deleted, inserted}, observed inside the write job.
     """
     keys = [on] if isinstance(on, str) else list(on)
     target = wh.read(table)
@@ -212,13 +214,15 @@ def merge_into(
             for c in src_cols
             if c not in keys and c in tgt_cols
         }
-    do_update = matched & (
+    # a deleted row never evaluates the update expressions: the delete
+    # filter runs above the observed node, after this projection
+    do_update = matched & ~do_delete & (
         F.coalesce(update_condition, F.lit(False))
         if update_condition is not None
         else F.lit(True)
     )
 
-    survivors = joined.where(~do_delete).select(
+    tagged = joined.select(
         *[
             (
                 F.when(do_update, update_set[c]).otherwise(F.col(c)).alias(c)
@@ -226,7 +230,8 @@ def merge_into(
                 else F.col(c)
             )
             for c in tgt_cols
-        ]
+        ],
+        F.when(do_delete, "deleted").when(do_update, "updated").alias(OP),
     )
 
     if insert:
@@ -247,25 +252,21 @@ def merge_into(
                 proj.append(_bucket_expr(keys).alias(c))
             else:
                 proj.append(F.lit(None).cast(field.dataType).alias(c))
-        inserts = ins_src.select(*proj)
-        final = survivors.unionByName(inserts)
-    else:
-        inserts = None
-        final = survivors
+        tagged = tagged.unionByName(ins_src.select(*proj, F.lit("inserted").alias(OP)))
 
-    stats = {"updated": -1, "deleted": -1, "inserted": -1}
-    if collect_stats:
-        row = joined.agg(
-            F.coalesce(F.sum(do_delete.cast("int")), F.lit(0)).alias("d"),
-            F.coalesce(
-                F.sum((do_update & ~do_delete).cast("int")), F.lit(0)
-            ).alias("u"),
-        ).first()
-        stats["deleted"], stats["updated"] = int(row["d"]), int(row["u"])
-        stats["inserted"] = int(inserts.count()) if inserts is not None else 0
-
+    # the counts ride the write job: the Observation sits on the one
+    # node that sees every clause's rows, above the delete filter
+    obs = Observation()
+    final = (
+        tagged.observe(
+            obs,
+            *[F.count_if(F.col(OP) == op).alias(op) for op in ("updated", "deleted", "inserted")],
+        )
+        .where(~F.col(OP).eqNullSafe("deleted"))
+        .drop(OP)
+    )
     if bucket_col is not None:
         wh.replace_partitions(table, final, bucket_col, touched)
     else:
         wh.overwrite(table, final)
-    return stats
+    return obs.get

@@ -30,13 +30,17 @@ file-level rewrites on a real cluster (see warehouse.py seam).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import scalar
 from .schemas import N_BUCKETS
 from .warehouse import Warehouse
+
+# M2/M3 tag each written row "matched" (a target row the batch updates),
+# "inserted", or NULL (an untouched target row) for _observe_merge
+_MERGE_OP = "_merge_op"
 
 
 def _bucket_of(*key_cols: str) -> F.Column:
@@ -45,63 +49,27 @@ def _bucket_of(*key_cols: str) -> F.Column:
     return F.pmod(F.xxhash64(*key_cols), F.lit(N_BUCKETS)).cast("int")
 
 
-def _next_ids(
-    existing: DataFrame, new_rows: DataFrame, order_col: str, small: bool = True
-) -> DataFrame:
+def _next_ids(existing: DataFrame, new_rows: DataFrame, order_col: str) -> DataFrame:
     """Assign sequential Ids to new_rows above max(existing.Id),
     ordered by order_col.
 
-    ``small=True`` (the default, and what every staging merge uses —
-    inserts are batch-sized by construction): one single-partition
-    window, ONE stage.  The range-sampling two-phase path below costs
-    ~4 tiny stages of pure scheduler overhead on a few-hundred-row
-    batch, which dominated r01's q41 profile.
-
-    ``small=False`` — bulk-backfill path: scalable two-phase numbering
-    with no global single-partition window: range-repartition by
-    order_col so partitions are globally ordered key ranges, row_number
-    within each partition, then shift by per-partition offsets (a
-    running sum over the partition-count frame, which has at most
-    #partitions rows).  Delta GENERATED ALWAYS AS IDENTITY replaces
-    both on a real cluster."""
-    if small:
-        # max(Id) rides along as a broadcast 1-row cross join instead of
-        # a .collect(): one fewer driver round-trip per merge, and the
-        # whole id assignment stays a single lazy plan
-        maxdf = existing.agg(
-            F.coalesce(F.max("Id"), F.lit(0)).cast("long").alias("_maxid")
-        )
-        w = Window.partitionBy(F.lit(1)).orderBy(order_col)
-        return (
-            new_rows.coalesce(1)
-            .crossJoin(F.broadcast(maxdf))
-            .withColumn("Id", (F.col("_maxid") + F.row_number().over(w)).cast("long"))
-            .drop("_maxid")
-        )
-    max_id = (existing.agg(F.coalesce(F.max("Id"), F.lit(0)).alias("m")).collect())[0]["m"]
-    local = (
-        new_rows.repartitionByRange(F.col(order_col))
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn("_rn", F.row_number().over(Window.partitionBy("_pid").orderBy(order_col)))
+    Inserts are batch-sized by construction, so one single-partition
+    window is ONE stage; a range-sampled two-phase numbering costs ~4
+    tiny stages of pure scheduler overhead on a few-hundred-row batch,
+    which dominated r01's q41 profile.  Delta GENERATED ALWAYS AS
+    IDENTITY replaces this on a real cluster."""
+    # max(Id) rides along as a broadcast 1-row cross join instead of a
+    # .collect(): one fewer driver round-trip per merge, and the whole
+    # id assignment stays a single lazy plan
+    maxdf = existing.agg(
+        F.coalesce(F.max("Id"), F.lit(0)).cast("long").alias("_maxid")
     )
-    offsets = (
-        local.groupBy("_pid")
-        .agg(F.max("_rn").alias("_cnt"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_cnt").over(
-                    Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("_pid", "_off")
-    )
+    w = Window.partitionBy(F.lit(1)).orderBy(order_col)
     return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn("Id", (F.lit(max_id) + F.col("_off") + F.col("_rn")).cast("long"))
-        .drop("_pid", "_rn", "_off")
+        new_rows.coalesce(1)
+        .crossJoin(F.broadcast(maxdf))
+        .withColumn("Id", (F.col("_maxid") + F.row_number().over(w)).cast("long"))
+        .drop("_maxid")
     )
 
 
@@ -111,12 +79,39 @@ def _staging_batch(wh: Warehouse, table: str, batch_guid: str) -> DataFrame:
     return wh.read(table).where(F.col("BatchGuid") == batch_guid)
 
 
-def merge_providers(wh: Warehouse, batch_guid: str, collect_stats: bool = True) -> int:
-    """M1: insert staging provider names that match no provider and no synonym.
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """Count ``df``'s rows inside the job that writes them: read the
+    count from the returned Observation only after that write returns
+    (``get`` blocks until the observed frame has run)."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
-    ``collect_stats=False`` writes in ONE job (no persist+count gate) —
-    the dim is tiny, so an occasional no-new-rows rewrite is cheaper
-    than a second action over the anti-join chain every batch."""
+
+def _observe_merge(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """Count the rows ``df`` tags ``matched`` / ``inserted`` in its
+    ``_MERGE_OP`` column inside the job that writes ``df``, and drop the
+    tag.  The target is unique on the merge key and the source touches
+    only the rewritten partitions, so matched + inserted is the
+    source's row count."""
+    obs = Observation()
+    observed = df.observe(
+        obs,
+        F.count_if(F.col(_MERGE_OP) == "matched").alias("matched"),
+        F.count_if(F.col(_MERGE_OP) == "inserted").alias("inserted"),
+    )
+    return observed.drop(_MERGE_OP), obs
+
+
+def _merge_stats(obs: Observation) -> dict[str, int]:
+    m = obs.get
+    return {"inserted": m["inserted"], "total_source": m["matched"] + m["inserted"]}
+
+
+def merge_providers(wh: Warehouse, batch_guid: str) -> int:
+    """M1: insert staging provider names that match no provider and no
+    synonym; returns the number inserted.  The dim is tiny, so it is
+    rewritten in ONE job even when nothing is new — cheaper than a
+    second action over the anti-join chain every batch."""
     staging = _staging_batch(wh, "staging_provider", batch_guid).select("Name").distinct()
     provider = wh.read("provider")
     synonyms = wh.read("provider_synonym")
@@ -129,26 +124,19 @@ def merge_providers(wh: Warehouse, batch_guid: str, collect_stats: bool = True) 
             "left_anti",
         )
     )
-    new_rows = _next_ids(provider, new_names, "Name").select(
-        "Id", "Name", F.current_timestamp().alias("CreateDt")
+    new_rows, obs = _counted(
+        _next_ids(provider, new_names, "Name").select(
+            "Id", "Name", F.current_timestamp().alias("CreateDt")
+        )
     )
-    if not collect_stats:
-        wh.overwrite("provider", provider.unionByName(new_rows))
-        return -1
-    # batch-sized: persist so the count gate and the write share one
-    # materialization instead of re-running the anti-join chain
-    new_rows = new_rows.persist()
-    n = new_rows.count()
-    if n:
-        wh.overwrite("provider", provider.unionByName(new_rows))
-    new_rows.unpersist()
-    return n
+    wh.overwrite("provider", provider.unionByName(new_rows))
+    return obs.get["n"]
 
 
-def ensure_units_of_measure(wh: Warehouse, batch_guid: str, collect_stats: bool = True) -> int:
+def ensure_units_of_measure(wh: Warehouse, batch_guid: str) -> int:
     """U1 (docs/ETL_ENHANCEMENTS.md:23): create unseen units before the
     product merge; acronym aliases (UnitOfMeasureAcronym) resolve to
-    existing units and are not duplicated.  ``collect_stats=False``
+    existing units and are not duplicated.  Returns the number created;
     writes in one job (see merge_providers)."""
     staging = (
         _staging_batch(wh, "staging_product", batch_guid)
@@ -162,18 +150,13 @@ def ensure_units_of_measure(wh: Warehouse, batch_guid: str, collect_stats: bool 
         staging.join(F.broadcast(uom.select(F.lower("Acronym").alias("Acronym"))), "Acronym", "left_anti")
         .join(F.broadcast(alias.select(F.lower("Acronym").alias("Acronym"))), "Acronym", "left_anti")
     )
-    new_rows = _next_ids(uom, unseen, "Acronym").select(
-        "Id", "Acronym", F.col("Acronym").alias("Name")
+    new_rows, obs = _counted(
+        _next_ids(uom, unseen, "Acronym").select(
+            "Id", "Acronym", F.col("Acronym").alias("Name")
+        )
     )
-    if not collect_stats:
-        wh.overwrite("unit_of_measure", uom.unionByName(new_rows))
-        return -1
-    new_rows = new_rows.persist()
-    n = new_rows.count()
-    if n:
-        wh.overwrite("unit_of_measure", uom.unionByName(new_rows))
-    new_rows.unpersist()
-    return n
+    wh.overwrite("unit_of_measure", uom.unionByName(new_rows))
+    return obs.get["n"]
 
 
 def _resolve_uom(wh: Warehouse, df: DataFrame, unit_col: str) -> DataFrame:
@@ -236,14 +219,13 @@ class _ProductMergePlan:
     can overlap M2's write with M3 (which needs only the Id↔hash
     mapping carried by ``final``, not the durable parquet)."""
 
-    __slots__ = ("final", "touched", "src0", "src", "new_rows")
+    __slots__ = ("final", "touched", "src0", "src")
 
-    def __init__(self, final, touched, src0, src, new_rows):
+    def __init__(self, final, touched, src0, src):
         self.final = final
         self.touched = touched
         self.src0 = src0
         self.src = src
-        self.new_rows = new_rows
 
     def release(self) -> None:
         for df in (self.final, self.src, self.src0):
@@ -251,16 +233,22 @@ class _ProductMergePlan:
 
 
 def plan_product_merge(
-    wh: Warehouse,
-    batch_guid: str,
-    prepared: tuple[DataFrame, list[int]] | None = None,
-    persist_mapping: bool = False,
+    wh: Warehouse, prepared: tuple[DataFrame, list[int]]
 ) -> _ProductMergePlan:
-    """Build M2's merged-table lineage (see :func:`merge_products` for
-    the contract) without writing.  ``persist_mapping=True`` persists
-    the final frame so a concurrent M3 and the commit's write job share
-    one materialization."""
-    src0, touched = prepared if prepared is not None else prepare_product_source(wh, batch_guid)
+    """M2: upsert keyed on DescriptionHash = sha256(Description)
+    (identity implied by the IX_Product_DescriptionHash index,
+    core/entities.py:106). Matched → update Measure/UnitOfMeasureId/
+    UpdatedDt ('update existing ones with latest data',
+    docs/ETL_ENHANCEMENTS.md:28); not matched → insert.
+
+    Builds the merged-table lineage without writing it.  ``prepared``
+    is the output of :func:`prepare_product_source`, which the
+    orchestrator overlaps with M1/U1; unit resolution stays lazy here
+    (it must see U1's units), riding inside the write job's broadcast
+    joins instead of costing its own action.  The final frame is
+    persisted so a concurrent M3 and the commit's write job share one
+    materialization."""
+    src0, touched = prepared
     # persist (lazily — the write job's first broadcast build fills the
     # cache) so the matched join, the insert anti-join, and the id
     # assignment don't each re-run the two uom-resolution joins
@@ -280,6 +268,7 @@ def plan_product_merge(
                 F.col("UnitPrice").alias("_new_unit_price"),
                 F.col("Measure").cast("decimal(18,2)").alias("_new_measure"),
                 F.col("UnitOfMeasureId").alias("_new_uom_id"),
+                F.lit("matched").alias(_MERGE_OP),
             )
         ),
         "DescriptionHash",
@@ -297,6 +286,7 @@ def plan_product_merge(
         .alias("UpdatedDt"),
         "DescriptionHash",
         "_bucket",
+        _MERGE_OP,
     )
 
     inserts_src = src.join(
@@ -312,21 +302,18 @@ def plan_product_merge(
         now.alias("UpdatedDt"),
         "DescriptionHash",
         _bucket_of("DescriptionHash").alias("_bucket"),
+        F.lit("inserted").alias(_MERGE_OP),
     )
-    final = updated.unionByName(new_rows)
-    if persist_mapping:
-        final = final.persist()
-    return _ProductMergePlan(final, touched, src0, src, new_rows)
+    final = updated.unionByName(new_rows).persist()
+    return _ProductMergePlan(final, touched, src0, src)
 
 
-def commit_product_merge(
-    wh: Warehouse, plan: _ProductMergePlan, collect_stats: bool = True, release: bool = True
-) -> dict[str, int]:
+def commit_product_merge(wh: Warehouse, plan: _ProductMergePlan) -> dict[str, int]:
     """Write M2's merged touched-bucket content (untouched partitions
-    hardlink forward).  ``release=False`` keeps the plan's caches alive
-    for a concurrent M3 still reading ``plan.final``."""
-    n_ins = plan.new_rows.count() if collect_stats else -1
-    final = plan.final
+    hardlink forward) and return {inserted, total_source}.  The plan's
+    caches stay alive for a concurrent M3 still reading ``plan.final``;
+    the caller releases them."""
+    final, obs = _observe_merge(plan.final)
     if not plan.touched:
         # bootstrap batch (empty target): the insert side rides the
         # single-partition id window, so the partitioned write would
@@ -337,55 +324,24 @@ def commit_product_merge(
         # blanket repartition costs more than it saves there).
         final = final.repartition(8, "_bucket")
     wh.replace_partitions("product", final, "_bucket", plan.touched)
-    n_src = plan.src0.count() if collect_stats else -1
-    if release:
-        plan.release()
-    return {"inserted": n_ins, "total_source": n_src}
-
-
-def merge_products(
-    wh: Warehouse,
-    batch_guid: str,
-    collect_stats: bool = True,
-    prepared: tuple[DataFrame, list[int]] | None = None,
-) -> dict[str, int]:
-    """M2: upsert keyed on DescriptionHash = sha256(Description)
-    (identity implied by the IX_Product_DescriptionHash index,
-    core/entities.py:106). Matched → update Measure/UnitOfMeasureId/
-    UpdatedDt ('update existing ones with latest data',
-    docs/ETL_ENHANCEMENTS.md:28); not matched → insert.
-
-    ``prepared`` is the output of :func:`prepare_product_source` when
-    the orchestrator overlapped the prep with M1/U1; unit resolution
-    stays lazy here (it must see U1's units), riding inside the write
-    job's broadcast joins instead of costing its own action."""
-    return commit_product_merge(
-        wh, plan_product_merge(wh, batch_guid, prepared), collect_stats
-    )
+    return _merge_stats(obs)
 
 
 def merge_provider_products(
-    wh: Warehouse,
-    batch_guid: str,
-    collect_stats: bool = True,
-    product_mapping: DataFrame | None = None,
+    wh: Warehouse, batch_guid: str, product_mapping: DataFrame
 ) -> dict[str, int]:
     """M3: resolve placeholder FKs from denormalized staging names
     (etl:151-152), then upsert keyed on (ProductId, ProviderId) —
     'insert new relationships, update existing ones'
-    (docs/ETL_ENHANCEMENTS.md:29).
+    (docs/ETL_ENHANCEMENTS.md:29).  Returns {inserted, total_source}.
 
-    ``product_mapping`` (Id, DescriptionHash): when the orchestrator
-    overlaps M3 with M2's write, it passes M2's in-memory merged frame —
-    every staged description's bucket is in M2's touched set by
+    ``product_mapping`` (Id, DescriptionHash) is M2's in-memory merged
+    frame: the orchestrator overlaps M3 with M2's write, and every
+    staged description's bucket is in M2's touched set by
     construction, so the mapping is complete without waiting for (or
     re-reading) the product parquet."""
     staging = _staging_batch(wh, "staging_provider_product", batch_guid)
-    product = (
-        product_mapping
-        if product_mapping is not None
-        else wh.read("product")
-    ).select(F.col("Id").alias("_product_id"), "DescriptionHash")
+    product = product_mapping.select(F.col("Id").alias("_product_id"), "DescriptionHash")
     provider = wh.read("provider").select(F.col("Id").alias("_provider_id"), "Name")
     synonyms = wh.read("provider_synonym").select(
         "Synonym", F.col("ProviderId").alias("_syn_provider_id")
@@ -433,7 +389,7 @@ def merge_provider_products(
     pp = wh.read("provider_product")
     base = pp.where(F.col("_bucket").isin(touched))
     matched = base.alias("t").join(
-        F.broadcast(src.alias("s")),
+        F.broadcast(src.withColumn(_MERGE_OP, F.lit("matched")).alias("s")),
         (F.col("t.ProductId") == F.col("s.ProductId"))
         & (F.col("t.ProviderId") == F.col("s.ProviderId")),
         "left",
@@ -448,6 +404,7 @@ def merge_provider_products(
         F.coalesce(F.col("s.IVA"), F.col("t.IVA")).alias("IVA"),
         F.coalesce(F.col("s.Price"), F.col("t.Price")).alias("Price"),
         F.col("t._bucket").alias("_bucket"),
+        F.col(f"s.{_MERGE_OP}"),
     )
     inserts_src = src.alias("s").join(
         base.select("ProductId", "ProviderId").alias("t"),
@@ -458,17 +415,16 @@ def merge_provider_products(
         "Id", "ProductId", "ProviderId", "IsValidated", "LastReviewDt",
         "PackageUnits", "IVA", "Price",
         _bucket_of("ProductId", "ProviderId").alias("_bucket"),
+        F.lit("inserted").alias(_MERGE_OP),
     )
-    n_ins = new_rows.count() if collect_stats else -1
-    merged = updated.unionByName(new_rows)
+    merged, obs = _observe_merge(updated.unionByName(new_rows))
     if not touched:
         # bootstrap fast path: parallelize the single-task partitioned
         # write (see commit_product_merge)
         merged = merged.repartition(8, "_bucket")
     wh.replace_partitions("provider_product", merged, "_bucket", touched)
-    n_src = src.count() if collect_stats else -1
     src.unpersist()
-    return {"inserted": n_ins, "total_source": n_src}
+    return _merge_stats(obs)
 
 
 def _cleanup_staging(wh: Warehouse, batch_guid: str) -> None:
@@ -478,9 +434,7 @@ def _cleanup_staging(wh: Warehouse, batch_guid: str) -> None:
         wh.delete_partition(t, "BatchGuid", batch_guid)
 
 
-def merge_staging_to_fact_tables(
-    wh: Warehouse, batch_guid: str, collect_stats: bool = True
-) -> dict[str, object]:
+def merge_staging_to_fact_tables(wh: Warehouse, batch_guid: str) -> dict[str, object]:
     """etl:168-189 — the three merges + cleanup, honoring the reference's
     dependency order: M1 (providers) and U1 (units) touch disjoint
     tables and staging partitions, so they submit CONCURRENTLY — along
@@ -489,23 +443,20 @@ def merge_staging_to_fact_tables(
     its write job after U1 lands.  M3 (provider_products) needs M1's
     providers and M2's *merged rows* — not the durable product parquet —
     so M2's write and the whole of M3 overlap, sharing M2's persisted
-    final frame as the Id↔DescriptionHash mapping.
-    ``collect_stats=False`` skips the stats-only count jobs and writes
-    dims in one job each."""
+    final frame as the Id↔DescriptionHash mapping.  Every statistic is
+    observed inside the merge's own write job, so none costs a job."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_prov = pool.submit(merge_providers, wh, batch_guid, collect_stats)
-        f_units = pool.submit(ensure_units_of_measure, wh, batch_guid, collect_stats)
+        f_prov = pool.submit(merge_providers, wh, batch_guid)
+        f_units = pool.submit(ensure_units_of_measure, wh, batch_guid)
         f_prep = pool.submit(prepare_product_source, wh, batch_guid)
         providers, units, prepared = f_prov.result(), f_units.result(), f_prep.result()
-    plan = plan_product_merge(wh, batch_guid, prepared=prepared, persist_mapping=True)
+    plan = plan_product_merge(wh, prepared)
     try:
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_m2 = pool.submit(commit_product_merge, wh, plan, collect_stats, False)
-            f_m3 = pool.submit(
-                merge_provider_products, wh, batch_guid, collect_stats, plan.final
-            )
+            f_m2 = pool.submit(commit_product_merge, wh, plan)
+            f_m3 = pool.submit(merge_provider_products, wh, batch_guid, plan.final)
             products, provider_products = f_m2.result(), f_m3.result()
     finally:
         # release even when a merge fails: the persisted final/src

@@ -106,7 +106,7 @@ def q41(spark: SparkSession, sf_dir: str) -> DataFrame:
     # worth of rows, so job-count, not data, is the cost driver
     with batch_pipeline_confs(spark):
         load_data_to_staging_tables(wh, wide, guid, collect_counts=False)
-        merge_staging_to_fact_tables(wh, guid, collect_stats=False)
+        merge_staging_to_fact_tables(wh, guid)
 
     # the readback below depends only on warehouse parquet, not on the
     # transform lineage — release the cache so repeated pipeline runs

@@ -199,7 +199,9 @@ def tune_batch_shuffle_partitions(
     dir share the setting, and a session that switches datasets
     re-derives it.  Partitioning never changes query RESULTS (every
     operator here is key- or order-insensitive to partition count),
-    only scheduling.
+    only scheduling.  A dir whose size cannot be measured here —
+    missing, not on the local filesystem, or empty — leaves the setting
+    untouched rather than pinning it to the floor.
     """
     import math
 
@@ -207,15 +209,17 @@ def tune_batch_shuffle_partitions(
     if key in _TUNED_SESSIONS:
         return
     _TUNED_SESSIONS.add(key)
+    path = Path(str(data_dir))
     try:
-        par = spark.sparkContext.defaultParallelism
-        path = Path(str(data_dir))
         nbytes = sum(f.stat().st_size for f in path.rglob("*") if f.is_file())
-        n = max(1, par // 8, math.ceil(nbytes / target_bytes))
-        n = min(n, 4 * par)
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    except Exception:  # tuning must never break a query
-        pass
+    except OSError:  # tuning must never break a query
+        return
+    if nbytes == 0:
+        return
+    par = spark.sparkContext.defaultParallelism
+    n = max(1, par // 8, math.ceil(nbytes / target_bytes))
+    n = min(n, 4 * par)
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
 
 
 def get_spark(

@@ -58,7 +58,6 @@ def test_csv_end_to_end(spark, wh):
     assert wh.read("staging_provider").isEmpty()
     assert wh.read("staging_product").isEmpty()
     assert wh.read("staging_provider_product").isEmpty()
-@pytest.mark.slow
 
 
 def test_ledger_skip_and_idempotent_rerun(spark, wh):
@@ -81,7 +80,6 @@ def test_ledger_skip_and_idempotent_rerun(spark, wh):
         "pp": wh.read("provider_product").count(),
     }
     assert state1 == state3
-@pytest.mark.slow
 
 
 def test_product_upsert_updates_existing(spark, wh):
@@ -97,7 +95,6 @@ def test_product_upsert_updates_existing(spark, wh):
     assert rows[0]["Id"] == v1["Id"]
     # two providers now reference the same product
     assert wh.read("provider_product").count() == 2
-@pytest.mark.slow
 
 
 def test_provider_synonym_resolution(spark, wh):
@@ -116,6 +113,34 @@ def test_provider_synonym_resolution(spark, wh):
     assert wh.read("provider").count() == 1
     pp = wh.read("provider_product").collect()
     assert all(r["ProviderId"] == canasta_id for r in pp)
+
+
+def test_etl_merge_stats(spark, wh):
+    """ProcessingResult.merge_stats: what each MERGE did to the batch.
+    The second file re-prices one product and brings one new product,
+    unit and provider."""
+    first = process_csv_file(
+        spark, wh, "c", "one.csv",
+        csv_text="Producto,Provedor,Precio\nArroz 500g,Prov,100\nFrijol 1kg,Prov,200\n",
+    )
+    assert first.success, first.message
+    assert first.merge_stats == {
+        "providers_inserted": 1,
+        "units_created": 2,
+        "products": {"inserted": 2, "total_source": 2},
+        "provider_products": {"inserted": 2, "total_source": 2},
+    }
+    second = process_csv_file(
+        spark, wh, "c", "two.csv",
+        csv_text="Producto,Provedor,Precio\nArroz 500g,Prov,120\nCafe 250ml,Nuevo,90\n",
+    )
+    assert second.success, second.message
+    assert second.merge_stats == {
+        "providers_inserted": 1,
+        "units_created": 1,
+        "products": {"inserted": 1, "total_source": 2},
+        "provider_products": {"inserted": 1, "total_source": 2},
+    }
 
 
 def test_uom_alias_not_duplicated(spark, wh):
@@ -163,7 +188,6 @@ def test_failed_file_marked_and_retryable(spark, wh):
 def test_header_gate_on_text_path(spark, wh):
     res = process_csv_text(spark, wh, "c", "nohdr.csv", "Producto,Precio\nX,1\n")
     assert not res.success and "missing" in res.message
-@pytest.mark.slow
 
 
 def test_invoice_archive_written_and_replayable(spark, wh, tmp_path):
@@ -195,7 +219,6 @@ def test_bootstrap_seeds_file_status_and_new_tables(spark, wh):
     pf = wh.read("process_file")
     fs = wh.read("file_status").select(F.col("Id").alias("fsid"), "StatusName")
     assert pf.join(fs, pf.StatusId == fs.fsid).count() == pf.count()
-@pytest.mark.slow
 
 
 def test_incremental_merge_rewrites_only_touched_buckets(spark, wh):

@@ -384,7 +384,6 @@ def test_bloom_semi_join_rejects_unmodeled_mixed_types(spark):
         ).collect()
     )
     assert got == [1]
-@pytest.mark.slow
 
 
 def test_range_join_pre1970_floor_buckets(spark):

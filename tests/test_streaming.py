@@ -48,7 +48,6 @@ def _memory_query(df, name, output_mode):
         .outputMode(output_mode)
         .start()
     )
-@pytest.mark.slow
 
 
 def test_stream_ingest_files_exactly_once(spark, tmp_path):
@@ -108,7 +107,6 @@ def test_validate_and_land_reenters_stream_source(spark, tmp_path):
 
 def ledger_status(wh):
     return {(r["FileName"], r["StatusId"]) for r in wh.read("process_file").collect()}
-@pytest.mark.slow
 
 
 def test_stream_ingest_directory_single_merge(spark, tmp_path):
